@@ -119,7 +119,6 @@ object Main {
     val baseline = Host.storage(spark)
     val walls = mutable.ArrayBuffer.empty[(Boolean, Double)]
     val cpus = mutable.ArrayBuffer.empty[Double]
-    val heaps = mutable.ArrayBuffer.empty[Double]
     val steps = mutable.ArrayBuffer.empty[Double]
     val layerRecs = mutable.ArrayBuffer.empty[Map[String, Double]]
     val tEnd = System.nanoTime() + (seconds * 1e9).toLong
@@ -133,11 +132,13 @@ object Main {
       val noise = Host.noise().minus(noise0)
       walls += ((traced, wall))
       out.foreach { case (k, o) => checks(s"$k.matches_reference")(o.matches(reference(k))) }
-      checks("engine.jobs_constant")(jobCounts.last == jobCounts.head)
+      // a pass served from a memo would lose a call's jobs (five or more);
+      // the engine itself sometimes runs one more or one fewer
+      checks("engine.jobs_constant")(math.abs(jobCounts.last - jobCounts.head) <= 1)
       checks("storage.released")(Host.awaitStorage(spark, baseline))
       val liveMb = HeapWatch.liveMb()
-      if (!traced) { cpus += cpuS; heaps += liveMb; steps ++= ctx.steps }
-      else layerRecs += layers
+      if (!traced) { cpus += cpuS; steps ++= ctx.steps }
+      else layerRecs += layers + ("engine.heap_live_mb" -> liveMb)
       val flagged = noise.stealMs > 0.05 * wall * 1000 * cores ||
         noise.foreignMs > 0.25 * wall * 1000 * noise.hostCores
       passLog += f"""{"pass":$p,"traced":$traced,"wall_s":$wall%.4f,"cpu_s":$cpuS%.4f,""" +
@@ -154,7 +155,6 @@ object Main {
       "job_s" -> jobS,
       "rows_per_s" -> ctx.rows / jobS,
       "cpu_s" -> median(cpus.toSeq),
-      "heap_peak_mb" -> heaps.max,
       "batch_ms.p50" -> percentile(steps.toSeq, 50),
       "batch_ms.p90" -> percentile(steps.toSeq, 90))
     val layerMetrics: Seq[(String, Double)] =
@@ -178,8 +178,7 @@ object Main {
 }
 
 /** Old-generation occupancy after a full collection: the heap a pass
-  * leaves live. Something of ~30 MB is reaped after some passes and not
-  * others, so a run reports the highest value over its passes. */
+  * leaves live. */
 object HeapWatch {
   private val oldGen = ManagementFactory.getMemoryPoolMXBeans.asScala
     .filter(p => p.getName.contains("Old Gen") || p.getName.contains("Tenured"))

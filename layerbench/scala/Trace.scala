@@ -240,9 +240,8 @@ final class Tracer(spark: SparkSession) {
 
     // keep jobs and stages as child spans for the trace file
     for (j <- jobs.values if j.endMs >= 0 && j.span >= 0) {
-      val js = Span(-1, j.span, pass, s"engine.job.${j.jobId}", "engine", "spark", "job",
-        j.submitMs.toDouble, j.endMs.toDouble)
-      childSpans += js
+      childSpans += Span(-2 - j.jobId, j.span, pass, s"engine.job.${j.jobId}", "engine", "spark",
+        "job", j.submitMs.toDouble, j.endMs.toDouble)
       for (sid <- j.stageIds; (s, c) <- stageTimes.get(sid) if stageJob.get(sid).contains(j.jobId))
         childSpans += Span(-1, -2 - j.jobId, pass, s"engine.stage.$sid", "engine", "spark",
           "stage", s.toDouble, c.toDouble)
@@ -257,15 +256,10 @@ final class Tracer(spark: SparkSession) {
     * id `-2 - jobId` so their stages can name them as parent. */
   def traceJson(): String = {
     def q(s: String) = "\"" + s + "\""
-    def rec(id: Int, s: Span) =
-      s"""{"id":$id,"parent":${s.parent},"pass":${s.pass},"name":${q(s.name)},""" +
+    (spans.filter(_.endMs >= 0) ++ childSpans).map { s =>
+      s"""{"id":${s.id},"parent":${s.parent},"pass":${s.pass},"name":${q(s.name)},""" +
         s""""start_ms":${s.startMs},"end_ms":${s.endMs}}"""
-    val own = spans.filter(_.endMs >= 0).map(s => rec(s.id, s))
-    val kids = childSpans.map { s =>
-      val id = if (s.kind == "job") -2 - s.name.stripPrefix("engine.job.").toInt else -1
-      rec(id, s)
-    }
-    (own ++ kids).mkString("[", ",\n", "]")
+    }.mkString("[", ",\n", "]")
   }
 }
 
