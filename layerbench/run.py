@@ -18,6 +18,7 @@ import math
 import os
 import shutil
 import signal
+import statistics
 import subprocess
 import sys
 import time
@@ -108,6 +109,16 @@ def check_iterate(con, data, out, claims, check):
         f"SELECT node, rank FROM {parquet(f'{out}/pagerank.parquet')}").fetchall())
     check("pagerank_oracle", lambda: ref.keys() == got.keys() and all(
         abs(ref[k] - got[k]) <= 1e-9 for k in ref))
+    # the rank terminals against the oracle's ranks: median, and the
+    # sample skewness formula of the indexed_pipeline check
+    xs = sorted(ref.values())
+    n = len(xs)
+    check("rank_median", lambda: abs(claims["rank_median"] - statistics.median(xs)) <= 1e-9)
+    mu = sum(xs) / n
+    varp = sum((x - mu) ** 2 for x in xs) / n
+    s3 = sum((x - mu) ** 3 for x in xs)
+    check("rank_skewness", lambda: close(
+        claims["rank_skewness"], (n / ((n - 1.0) * (n - 2.0))) * (s3 / varp ** 1.5), rel=1e-6))
 
 
 CHECKS = {"indexed_pipeline": check_indexed_pipeline, "text_dedup": check_text_dedup,

@@ -103,17 +103,27 @@ object Gen {
       .toDF("l_orderkey", "l_suppkey")
   }
 
-  /** Near-dup edge set over `n` ids in blocks of 64: each id links to an
-    * id up to 20 positions back in its block with probability 0.6, giving
-    * chains and small trees of varied diameter (the shapes connected
-    * components must collapse). */
+  /** Near-dup edge set over `n` ids (rounded down to whole blocks of
+    * 64): each id links to an id up to 20 positions back in its block
+    * with probability 0.6, giving chains and small trees of varied
+    * diameter (the shapes connected components must collapse). The block
+    * shapes come from one fixed stream and the seed only orders them, so
+    * every seed has the same components, with other ids, and connected
+    * components runs the same number of rounds: with shapes drawn from
+    * the seed it ran 3 rounds at some seeds and 4 at others, and the
+    * pass's work changed with the seed. */
   def edges(spark: SparkSession, n: Long, seed: Long): DataFrame = {
     import spark.implicits._
+    val shapes = salt(0, 7)
     val s = salt(seed, 7)
-    spark.range(1, n).flatMap { boxed =>
+    val nBlocks = math.max(1L, n / 64)
+    val shapeOf = (0L until nBlocks).sortBy(b => u(s, b, 3)).toArray
+    spark.range(1, nBlocks * 64).flatMap { boxed =>
       val id: Long = boxed
-      val back = id - 1 - (u(s, id, 2) * 20).toLong
-      if (id % 64 != 0 && u(s, id, 1) < 0.6) Seq((math.max(id - id % 64, back), id))
+      val (block, local) = (id / 64, id % 64)
+      val t = shapeOf(block.toInt) * 64 + local
+      val back = local - 1 - (u(shapes, t, 2) * 20).toLong
+      if (local != 0 && u(shapes, t, 1) < 0.6) Seq((block * 64 + math.max(0L, back), id))
       else Seq.empty
     }.toDF("a", "b")
   }

@@ -8,14 +8,15 @@ import org.apache.spark.sql.{GraftColumnShim, SparkSession}
 
 /** Benchmark driver: one process, one driver thread, `local[nproc]`.
   *
-  * Set-up is session start, input generation and set-up artefacts
-  * (done three times; the median counts) and one untimed warm-up pass,
-  * whose results are verified and become the reference every timed
-  * pass must reproduce. Timed passes follow until `--seconds` have
-  * elapsed (at least two; four with `--trace 1`, where untraced and
-  * traced passes alternate in pairs). Per-layer numbers come from the
-  * traced passes, and the tracing overhead is their median wall minus
-  * the untraced median. Results go to `<work>/result.json`.
+  * Set-up is session start plus three rounds of input generation,
+  * set-up artefacts and one untimed warm-up pass; `setup_s` counts the
+  * session and the median round. The first round's pass is verified and
+  * becomes the reference every later pass must reproduce. Two more
+  * untimed passes let the JIT settle. Timed passes follow until
+  * `--seconds` have elapsed (at least two; four with `--trace 1`, where
+  * untraced and traced passes alternate in pairs). Per-layer numbers
+  * come from the traced passes, and the tracing overhead is their median
+  * wall minus the untraced median. Results go to `<work>/result.json`.
   *
   * Usage: layerbench.Main --workload W --seed N --seconds S --trace 0|1
   *        --work DIR [--scale F] */
@@ -56,6 +57,10 @@ object Main {
       .appName("layerbench")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
+      // Spark's default of 100 generated classes is fewer than one pass
+      // of `iterate` compiles, so every pass recompiled ~340 classes and
+      // the JIT compiled them again: passes never warmed up
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
       .config("spark.driver.bindAddress", "127.0.0.1")
@@ -96,30 +101,43 @@ object Main {
       (out, (e - s) / 1000.0, cpuS, layers)
     }
 
-    // ---- set-up: inputs and artefacts three times (median), then one
-    // verified warm-up pass
-    val genRounds = (1 to 3).map { _ =>
+    // ---- set-up: three rounds of inputs, artefacts and a warm-up pass
+    // (the median round counts); the first round's pass is verified
+    var reference = Map.empty[String, Out]
+    val setupRounds = (1 to 3).map { r =>
       val s0 = System.nanoTime()
       wl.generate(ctx)
       wl.prepare(ctx)
-      phase("inputs generated")
-      (System.nanoTime() - s0) / 1e9
+      ctx.keep = r == 1
+      val (out, _, _, _) = runPass(-r, traced = false)
+      ctx.keep = false
+      val roundS = (System.nanoTime() - s0) / 1e9
+      if (r == 1) {
+        reference = out
+        reference.foreach { case (k, o) => checks(s"$k.ran")(!o.exact.startsWith("threw")) }
+        wl.verify(ctx)
+        ctx.raw.clear()
+        phase("warm-up pass verified")
+      } else {
+        out.foreach { case (k, o) => checks(s"$k.matches_reference")(o.matches(reference(k))) }
+        phase("warm-up pass done")
+      }
+      roundS
     }
-    ctx.keep = true
-    val (reference, warmS, _, _) = runPass(-1, traced = false)
-    ctx.keep = false
-    reference.foreach { case (k, o) => checks(s"$k.ran")(!o.exact.startsWith("threw")) }
-    phase("warm-up pass done")
-    wl.verify(ctx)
-    ctx.raw.clear()
-    phase("warm-up verified")
-    val setupS = sessionS + median(genRounds) + warmS
+    val setupS = sessionS + median(setupRounds)
+    // two more untimed passes: the JIT is still compiling the pass's
+    // driver code after three
+    for (w <- 4 to 5) {
+      val (out, _, _, _) = runPass(-w, traced = false)
+      out.foreach { case (k, o) => checks(s"$k.matches_reference")(o.matches(reference(k))) }
+    }
+    phase("warmed up")
 
     // ---- timed passes
     val baseline = Host.storage(spark)
     val walls = mutable.ArrayBuffer.empty[(Boolean, Double)]
     val cpus = mutable.ArrayBuffer.empty[Double]
-    val steps = mutable.ArrayBuffer.empty[Double]
+    val stepRecs = mutable.ArrayBuffer.empty[Vector[Double]]
     val layerRecs = mutable.ArrayBuffer.empty[Map[String, Double]]
     val tEnd = System.nanoTime() + (seconds * 1e9).toLong
     var p = 0
@@ -128,8 +146,12 @@ object Main {
     while (p < (if (trace) 4 else 2) || System.nanoTime() < tEnd) {
       val traced = trace && (p % 4 == 1 || p % 4 == 2)
       val noise0 = Host.noise()
+      val jit0 = Host.jitMs
+      val cls0 = ManagementFactory.getClassLoadingMXBean.getTotalLoadedClassCount
       val (out, wall, cpuS, layers) = runPass(p, traced)
       val noise = Host.noise().minus(noise0)
+      val jitMs = Host.jitMs - jit0
+      val cls = ManagementFactory.getClassLoadingMXBean.getTotalLoadedClassCount - cls0
       walls += ((traced, wall))
       out.foreach { case (k, o) => checks(s"$k.matches_reference")(o.matches(reference(k))) }
       // a pass served from a memo would lose a call's jobs (five or more);
@@ -137,12 +159,12 @@ object Main {
       checks("engine.jobs_constant")(math.abs(jobCounts.last - jobCounts.head) <= 1)
       checks("storage.released")(Host.awaitStorage(spark, baseline))
       val liveMb = HeapWatch.liveMb()
-      if (!traced) { cpus += cpuS; steps ++= ctx.steps }
+      if (!traced) { cpus += cpuS; stepRecs += ctx.steps.toVector }
       else layerRecs += layers + ("engine.heap_live_mb" -> liveMb)
       val flagged = noise.stealMs > 0.05 * wall * 1000 * cores ||
         noise.foreignMs > 0.25 * wall * 1000 * noise.hostCores
       passLog += f"""{"pass":$p,"traced":$traced,"wall_s":$wall%.4f,"cpu_s":$cpuS%.4f,""" +
-        f""""heap_live_mb":$liveMb%.1f,"jobs":${jobCounts.last},""" +
+        f""""jit_ms":$jitMs,"classes":$cls,"heap_live_mb":$liveMb%.1f,"jobs":${jobCounts.last},""" +
         f""""steal_ms":${noise.stealMs}%.0f,"foreign_cpu_ms":${noise.foreignMs}%.0f,"flagged":$flagged}"""
       phase(passLog.last)
       p += 1
@@ -150,13 +172,20 @@ object Main {
 
     val untraced = walls.filter(!_._1).map(_._2).toSeq
     val jobS = median(untraced)
+    // every pass makes the same calls (or pushes the same micro-batches)
+    // in the same order: each position's latency is its median over the
+    // untraced passes, and the percentiles are taken over positions, so
+    // one slow pass cannot move them and they never fall between two
+    // different calls' samples
+    checks("steps.same_shape")(stepRecs.map(_.size).distinct.size == 1)
+    val slotMs = stepRecs.toSeq.transpose.map(median)
     val e2e = Seq(
       "setup_s" -> setupS,
       "job_s" -> jobS,
       "rows_per_s" -> ctx.rows / jobS,
       "cpu_s" -> median(cpus.toSeq),
-      "batch_ms.p50" -> percentile(steps.toSeq, 50),
-      "batch_ms.p90" -> percentile(steps.toSeq, 90))
+      "batch_ms.p50" -> percentile(slotMs, 50),
+      "batch_ms.p90" -> percentile(slotMs, 90))
     val layerMetrics: Seq[(String, Double)] =
       if (layerRecs.isEmpty) Nil
       else layerRecs.head.keys.toSeq.sorted.map(k => k -> median(layerRecs.map(_(k)).toSeq)) :+
@@ -168,7 +197,8 @@ object Main {
     val json =
       s"""{"workload":"${wl.name}","seed":$seed,"attempted":${checks.attempted},""" +
         s""""failed":${checks.failed},"failures":${checks.failures.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""rows_per_pass":${ctx.rows},"batches":${steps.size},"e2e":${obj(e2e)},""" +
+        s""""rows_per_pass":${ctx.rows},"batches_per_pass":${slotMs.size},""" +
+        s""""setup_rounds_s":${setupRounds.mkString("[", ",", "]")},"e2e":${obj(e2e)},""" +
         s""""layers":${obj(layerMetrics)},"passes":${passLog.mkString("[", ",", "]")}}"""
     Files.writeString(Paths.get(s"$work/result.json"), json)
     if (trace) Files.writeString(Paths.get(s"$work/trace.json"), tracer.traceJson())
@@ -203,6 +233,9 @@ object Host {
   private val os = ManagementFactory.getOperatingSystemMXBean
     .asInstanceOf[com.sun.management.OperatingSystemMXBean]
   def processCpuNs: Long = os.getProcessCpuTime
+  /** Cumulative JIT compiler time, ms (a pass that still compiles much
+    * is not yet warm). */
+  def jitMs: Long = ManagementFactory.getCompilationMXBean.getTotalCompilationTime
 
   /** Cumulative host steal and host CPU not spent by this process, ms. */
   def noise(): Noise =
