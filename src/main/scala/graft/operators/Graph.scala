@@ -20,15 +20,27 @@ object Graph {
     * list first (as the undirected-graph callers do) if every node must
     * keep out-degree ≥ 1. Deterministic: no RNG, fixed `iters`.
     *
+    * Both id paths below share ONE private rank core, [[rankRounds]]:
+    * out-degrees, the (src, dst, deg) spine, the once-computed constant
+    * frame of in-neighborless nodes, the round loop and its checkpoint
+    * cadence all live there, on dense long ids. Each entry point keeps
+    * only what differs — how the long edge list and node set are built,
+    * and the string path's relabel and label-back — and then runs ONE
+    * eager output checkpoint before freeing every working block. Without
+    * it the returned lazy chain re-runs all `iters` joins on EVERY caller
+    * action, and the working blocks stay pinned for the session (the
+    * long-lived-session leak class: a hundred queries of leaked spines
+    * eventually evict each other into disk thrash).
+    *
     * 100 TB shape: the edge list is deduplicated and joined with its
-    * out-degrees ONCE, then localCheckpoint-ed — it re-enters every
-    * round's join with bounded lineage and AQE re-plans each round on
-    * real propagated sizes (same discipline as
+    * out-degrees ONCE, then checkpointed — it re-enters every round's
+    * join with bounded lineage and AQE re-plans each round on real
+    * propagated sizes (same discipline as
     * [[Dedup.connectedComponentsWithStats]]). Each round is exactly one
     * shuffle join (ranks meet edges on src) plus one partial-aggregated
     * groupBy (contributions meet on dst) — never an all-pairs form, and
     * per-round state is one (node, rank) row per node. The only driver
-    * scalar is N (node count — free, counted off the already-checkpointed
+    * scalar is N (node count — one count job that also materializes the
     * node blocks). Hub nodes (a page every doc links to) produce a
     * skewed dst groupBy — partial aggregation bounds it at one row per
     * (dst × task).
@@ -104,86 +116,21 @@ object Graph {
       .join(dict.select(col("name").as("src"), col("nid").as("srcId")), "src")
       .join(dict.select(col("name").as("dst"), col("nid").as("dstId")), "dst")
       .select(col("srcId").as("src"), col("dstId").as("dst"))
-    val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    // (src, dst, deg) long-keyed spine — reused by every round's join
-    val spine = e.join(outDeg, "src").ckpt()
-    // Nodes with NO in-edges receive zero contribution in EVERY round
-    // (every spine src has rank > 0 and deg ≥ 1, so every node with an
-    // in-edge appears in every round's contribution aggregate), hence
-    // their rank is the CONSTANT (1−d)/N after any round. Computing
-    // that set once — a node-sized anti join — replaces the per-round
-    // dict ⋈ contribs left join that re-scanned and re-shuffled the
-    // node frame every round (guide §2.4 remove shuffles outright;
-    // in-loop plan evidence in plans/r20/). Same double: the old path
-    // computed (1−d)/N + d·0.0, and x + d·0.0 ≡ x for x > 0.
-    val noInRanks = dict.select(col("nid"))
-      .join(e.select(col("dst").as("nid")).distinct(), Seq("nid"), "left_anti")
-      .select(col("nid").as("id"), lit((1.0 - damping) / n).as("rank"))
-      .ckpt(false) // node-sized; materializes inside the output job
-    var ranks = dict.select(col("nid").as("id"), lit(1.0 / n).as("rank"))
-    val intermediates = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (round <- 0 until iters) {
-      // SHUFFLE_HASH on the node-sized ranks side: SMJ would SORT the
-      // edge-sized spine every round after its exchange; the hash join
-      // streams the spine unsorted and builds per-partition tables
-      // bounded by nodes/parts rows of 16 bytes — spillable,
-      // partition-count-scaled (guide §3.1). Same-JVM interleaved probe
-      // (QProbePr): leftjoin 3.19 s / union 2.79 / union+SHJ 2.00 —
-      // plans committed under plans/r20/.
-      ranks = spine
-        .join(ranks.select(col("id").as("src"), col("rank"))
-          .hint("SHUFFLE_HASH"), "src")
-        .groupBy(col("dst").as("id"))
-        .agg(sum(col("rank") / col("deg")).as("cin"))
-        .select(col("id"),
-          (lit((1.0 - damping) / n) +
-            lit(damping) * col("cin")).as("rank"))
-        .unionByName(noInRanks)
-      // periodic eager checkpoint: deep iteration counts keep lineage
-      // and planning time bounded; shallow runs stay one lazy chain
-      // into the final checkpoint below
-      if ((round + 1) % checkpointEvery == 0 && round + 1 < iters) {
-        ranks = ranks.ckpt()
-        intermediates += ranks
-      }
-    }
-    // ONE eager checkpoint of the (node, rank)-sized result — mapped
-    // back to the CALLER's node ids — then free every working block:
-    // dict, spine, periodic round checkpoints. Without this the
-    // returned lazy chain re-runs all `iters` joins on EVERY caller
-    // action, and the working blocks stay pinned for the session (the
-    // long-lived-session leak class: a hundred queries of leaked spines
-    // eventually evict each other into disk thrash).
+    val (ranks, blocks) = rankRounds(e, dict.select(col("nid")), n, iters,
+      damping, checkpointEvery)
     val out = ranks.join(dict, ranks("id") === dict("nid"))
       .select(col("name").as("id"), col("rank"))
       .ckpt()
-    (Seq(eStr, dict, spine, noInRanks) ++ intermediates).foreach(
+    (Seq(eStr, dict) ++ blocks).foreach(
       org.apache.spark.sql.GraftColumnShim.unpersistCheckpoint)
     out
   }
 
-  /** [[pageRank]] for integer-typed endpoint ids — identical rank
-    * arithmetic, no relabel. Round shape (r20, from the executed-plan
-    * audit in plans/r20/): a checkpoint scan carries NO recognizable
-    * partitioning under AQE (micro-checked: eager and lazy alike get an
-    * Exchange on a same-key join), so the per-round spine exchange
-    * cannot be elided — AQE's ReusedExchange collapses the identical
-    * per-round spine exchanges to one write re-read per round, which is
-    * the best this structure admits. What each round pays beyond that
-    * read: one node-sized ranks exchange, one hash join (SHUFFLE_HASH —
-    * no edge-sized sorts), and the partial-aggregated contribution
-    * groupBy on dst. In-neighborless nodes are re-attached by a UNION
-    * with a once-computed constant frame, not a per-round join — see
-    * `noInRanks`. */
+  /** [[pageRank]] for integer-typed endpoint ids: no relabel, the
+    * caller's ids are the spine keys and come back as LONG. */
   private def pageRankLong(edges: DataFrame, srcCol: String, dstCol: String,
                            iters: Int, damping: Double,
                            checkpointEvery: Int): DataFrame = {
-    // LAZY checkpoints, materialized by the two actions that already
-    // exist (nodes.count here, the output checkpoint below): the eager
-    // form ran one driver job per checkpoint — three extra job
-    // round-trips whose scheduling cost rivals the rank rounds at
-    // bench scale. Blocks still bound lineage exactly as before; the
-    // unpersists at the end run strictly after materialization.
     // Repartition on src FIRST: hash(src) satisfies the distinct's
     // (src, dst) clustering (same src ⇒ same partition), so the edge
     // list is shuffled ONCE in the materialization job — the r19 shape
@@ -191,8 +138,8 @@ object Graph {
     // the whole edge list through a separate repartition(src) when
     // building the spine (plan diff in plans/r20/). REPARTITION_BY_NUM
     // so AQE cannot coalesce the width. NOTE the layout does NOT
-    // survive the checkpoint (see the round-shape doc below) — this is
-    // purely a setup-job saving.
+    // survive the checkpoint (see [[rankRounds]]) — this is purely a
+    // setup-job saving.
     val parts = math.max(1,
       edges.sparkSession.sessionState.conf.numShufflePartitions)
     val e = edges.select(col(srcCol).cast("long").as("src"),
@@ -205,28 +152,68 @@ object Graph {
       .distinct()
       .ckpt(false)
     val n = nodes.count() // materializes e + nodes; one driver scalar
-    // SHUFFLE_HASH: both sides are already hash(src, parts), SMJ would
-    // only add two sorts; the build side is the ≤nodes-sized outDeg
+    val (ranks, blocks) = rankRounds(e, nodes, n, iters, damping,
+      checkpointEvery)
+    val out = ranks.ckpt()
+    (Seq(e, nodes) ++ blocks).foreach(
+      org.apache.spark.sql.GraftColumnShim.unpersistCheckpoint)
+    out
+  }
+
+  /** The rank core both id paths share: `e` is the deduplicated
+    * (src, dst) LONG edge list, `nodes` the (nid) node set of size `n`.
+    * Returns the LAZY final (id, rank) frame and the working blocks the
+    * caller frees once its output checkpoint has run.
+    *
+    * LAZY checkpoints (spine, `noInRanks`), materialized by the caller's
+    * output checkpoint — the action that already exists: the eager form
+    * ran one driver job per checkpoint, job round-trips whose scheduling
+    * cost rivals the rank rounds at bench scale. Blocks still bound
+    * lineage; the caller's unpersists run strictly after
+    * materialization.
+    *
+    * Round shape (r20, from the executed-plan audit in plans/r20/): a
+    * checkpoint scan carries NO recognizable partitioning under AQE
+    * (micro-checked: eager and lazy alike get an Exchange on a same-key
+    * join), so the per-round spine exchange cannot be elided — AQE's
+    * ReusedExchange collapses the identical per-round spine exchanges to
+    * one write re-read per round, which is the best this structure
+    * admits. What each round pays beyond that read: one node-sized ranks
+    * exchange, one hash join (SHUFFLE_HASH — no edge-sized sorts), and
+    * the partial-aggregated contribution groupBy on dst. */
+  private def rankRounds(e: DataFrame, nodes: DataFrame, n: Long,
+                         iters: Int, damping: Double,
+                         checkpointEvery: Int): (DataFrame, Seq[DataFrame]) = {
+    // SHUFFLE_HASH: SMJ would only add two sorts on the edge-sized side;
+    // the build side is the ≤nodes-sized outDeg
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val spine = e.join(outDeg.hint("SHUFFLE_HASH"), "src")
-      .ckpt(false) // materialized inside the output job's first round
-    // Nodes with NO in-edges take zero contribution in EVERY round, so
-    // their rank is the constant (1−d)/N after any round — computed
-    // ONCE here (node-sized anti join) and unioned into each round's
-    // result instead of the per-round nodes ⋈ contribs left join that
-    // re-scanned and re-shuffled the node frame every round (guide
-    // §2.4; the r20 in-loop plan dump shows the join and its exchanges
-    // gone — plans/r20/q84_pagerank_round_{before,after}.txt). The
-    // double is unchanged: the old path computed (1−d)/N + d·0.0 and
-    // x + d·0.0 ≡ x for x > 0.
+    // (src, dst, deg) long-keyed spine — reused by every round's join
+    val spine = e.join(outDeg.hint("SHUFFLE_HASH"), "src").ckpt(false)
+    // Nodes with NO in-edges receive zero contribution in EVERY round
+    // (every spine src has rank > 0 and deg ≥ 1, so every node with an
+    // in-edge appears in every round's contribution aggregate), hence
+    // their rank is the CONSTANT (1−d)/N after any round. Computing
+    // that set once — a node-sized anti join — and unioning it into each
+    // round's result replaces the per-round nodes ⋈ contribs left join
+    // that re-scanned and re-shuffled the node frame every round (guide
+    // §2.4 remove shuffles outright; the in-loop plan dump shows the
+    // join and its exchanges gone —
+    // plans/r20/q84_pagerank_round_{before,after}.txt). Same double: the
+    // old path computed (1−d)/N + d·0.0, and x + d·0.0 ≡ x for x > 0.
     val noInRanks = nodes
       .join(e.select(col("dst").as("nid")).distinct(), Seq("nid"), "left_anti")
       .select(col("nid").as("id"), lit((1.0 - damping) / n).as("rank"))
-      .ckpt(false) // node-sized; materializes inside the output job
+      .ckpt(false)
     var ranks = nodes.select(col("nid").as("id"), lit(1.0 / n).as("rank"))
     val intermediates = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (round <- 0 until iters) {
-      // SHUFFLE_HASH on the node-sized ranks side — see pageRankLong
+      // SHUFFLE_HASH on the node-sized ranks side: SMJ would SORT the
+      // edge-sized spine every round after its exchange; the hash join
+      // streams the spine unsorted and builds per-partition tables
+      // bounded by nodes/parts rows of 16 bytes — spillable,
+      // partition-count-scaled (guide §3.1). Same-JVM interleaved A/B
+      // (OPTIMIZATION_r20.md §1): leftjoin 3.19 s / union 2.79 /
+      // union+SHJ 2.00 — plans committed under plans/r20/.
       ranks = spine
         .join(ranks.select(col("id").as("src"), col("rank"))
           .hint("SHUFFLE_HASH"), "src")
@@ -236,21 +223,14 @@ object Graph {
           (lit((1.0 - damping) / n) +
             lit(damping) * col("cin")).as("rank"))
         .unionByName(noInRanks)
+      // periodic eager checkpoint: deep iteration counts keep lineage
+      // and planning time bounded; shallow runs stay one lazy chain
+      // into the caller's output checkpoint
       if ((round + 1) % checkpointEvery == 0 && round + 1 < iters) {
         ranks = ranks.ckpt()
         intermediates += ranks
       }
     }
-    val out = ranks.ckpt()
-    // plan-audit instrumentation (dev-only, env-gated): the round-loop
-    // plan is internal — the checkpoint above ran ranks' own
-    // queryExecution, so its executedPlan is the AQE-FINAL loop plan
-    if (sys.env.contains("GRAFT_PR_EXPLAIN")) {
-      println("===== pageRankLong executed round-loop plan =====")
-      println(ranks.queryExecution.executedPlan.toString)
-    }
-    (Seq(e, nodes, spine, noInRanks) ++ intermediates).foreach(
-      org.apache.spark.sql.GraftColumnShim.unpersistCheckpoint)
-    out
+    (ranks, Seq(spine, noInRanks) ++ intermediates)
   }
 }

@@ -1066,6 +1066,27 @@ class OperatorSpec extends AnyFunSuite {
     assert(out((1L, 0)) == ((2L, 10.5)) && out((1L, 1)) == ((2L, 10.5)))
   }
 
+  test("kmeans iterate: string ids seeding out of numeric order match numeric ids") {
+    import graft.operators.Similarity
+    // the same corpus as above under ids 9, 10, 90.. — a string column
+    // seeds "10" before "9", a numeric one 9 before 10, so the seed SET
+    // is the same but arrives in the opposite order. Points 90 and 91
+    // tie between both seeds in round 1: the smaller cid (9) must win
+    // in both, and the clusters must come out identical.
+    val pts = Seq(
+      (9L, Array(0f, 0f)), (10L, Array(1f, 1f)),
+      (90L, Array(0f, 1f)), (91L, Array(1f, 0f)),
+      (92L, Array(10f, 10f)), (93L, Array(11f, 11f)))
+    def run(df: org.apache.spark.sql.DataFrame) =
+      Similarity.kmeansIterate(df, "vec_id", "embedding", 2, maxIter = 10)
+        .collect().map(r => (r.getLong(0), r.getInt(1)) -> (r.getLong(2), r.getDouble(3))).toMap
+    val byLong = run(pts.toDF("vec_id", "embedding"))
+    val byString = run(pts.map { case (i, v) => (i.toString, v) }.toDF("vec_id", "embedding"))
+    assert(byString == byLong)
+    assert(byLong((9L, 0)) == ((4L, 0.5)) && byLong((9L, 1)) == ((4L, 0.5)))
+    assert(byLong((10L, 0)) == ((2L, 10.5)) && byLong((10L, 1)) == ((2L, 10.5)))
+  }
+
   test("grouped running total: per-group cumsum matches the naive window, string lead") {
     import graft.operators.Windows
     import org.apache.spark.sql.expressions.{Window => W}

@@ -110,8 +110,9 @@ class PipelineOpsSpec extends AnyFunSuite {
   }
 
   // long-id twins: the integral-id fast path (no relabel, id returned as
-  // LONG — the documented id-type contract) reimplements the iteration,
-  // so it needs the same behavioral pins as the string path (r19 ADVICE)
+  // LONG — the documented id-type contract) builds its own edge list and
+  // node set before the shared rank core, so it needs the same
+  // behavioral pins as the string path (r19 ADVICE)
   test("pageRank long ids: uniform two-node, star closed form, dangling leak, iters=0") {
     val e2 = Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")
     val r2 = Graph.pageRank(e2, iters = 5).collect()
@@ -143,6 +144,45 @@ class PipelineOpsSpec extends AnyFunSuite {
       .map(x => x.getLong(0) -> x.getDouble(1)).toMap
     rc.keys.foreach(k => assert(rc(k) == rn(k),
       s"checkpointEvery must not change values: $k ${rc(k)} ${rn(k)}"))
+    // both id paths run the same rank core: the string-id copy of the
+    // star, through the same periodic-checkpoint cadence, agrees
+    val symStr = sym.select(col("src").cast("string").as("src"),
+      col("dst").cast("string").as("dst"))
+    val rcs = Graph.pageRank(symStr, iters = 5, checkpointEvery = 2).collect()
+      .map(x => x.getString(0).toLong -> x.getDouble(1)).toMap
+    assert(rcs.keySet == rc.keySet)
+    rc.keys.foreach(k => assert(math.abs(rcs(k) - rc(k)) < 1e-12,
+      s"string and long ids must rank alike: $k ${rcs(k)} ${rc(k)}"))
+  }
+
+  test("pageRank string ids: only the output checkpoint outlives the call") {
+    // the relabel path pins eStr, dict, spine, noInRanks and the
+    // periodic round checkpoints while it runs and releases each one
+    // explicitly before returning — so right after the call, with no
+    // GC wait, exactly ONE new block set (the output) is pinned, and
+    // none once the result is dropped
+    def pinnedIds: Set[Int] =
+      spark.sparkContext.getPersistentRDDs.keysIterator.toSet
+    val fwd = Seq(("l1", "h"), ("l2", "h"), ("l3", "h")).toDF("src", "dst")
+    val sym = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
+    val before = pinnedIds
+    var out = Graph.pageRank(sym, iters = 5, checkpointEvery = 2)
+    val extra = (pinnedIds -- before).toSeq.sorted
+    assert(extra.size == 1,
+      s"blocks pinned after the call (ids ${extra.mkString(",")}): " +
+        s"${extra.size}, but only the output checkpoint may survive — " +
+        "a relabel or round working block was not released")
+    assert(out.count() == 4L)
+    out = null
+    val deadline = System.nanoTime + 120L * 1000 * 1000 * 1000
+    var remaining = (pinnedIds -- before).toSeq
+    while (remaining.nonEmpty && System.nanoTime < deadline) {
+      System.gc(); Thread.sleep(500)
+      remaining = (pinnedIds -- before).toSeq
+    }
+    assert(remaining.isEmpty,
+      "output checkpoint still pinned after the result was dropped — " +
+        "something holds a strong reference past the caller's lifetime")
   }
 
   // --- bm25 -----------------------------------------------------------
